@@ -46,12 +46,19 @@ private[graft] object Checkpoints {
     * the job count of every round that stages anyway (and at cluster
     * scale saves one full pass over the staged rows per round).
     */
-  def stageCount(df: DataFrame): (DataFrame, Long) = {
+  def stageCount(df: DataFrame): (DataFrame, Long) =
+    stageObserving[Long](df, org.apache.spark.sql.functions.count(
+      org.apache.spark.sql.functions.lit(1)))
+
+  /** [[stage]] + one aggregate over the staged rows, observed on the
+    * staging job (the [[stageCount]] mechanism for any aggregate, e.g.
+    * a null count that gates a write).
+    */
+  def stageObserving[T](df: DataFrame,
+                        agg: org.apache.spark.sql.Column): (DataFrame, T) = {
     val obs = org.apache.spark.sql.Observation()
-    val st = stage(df.observe(obs,
-      org.apache.spark.sql.functions.count(
-        org.apache.spark.sql.functions.lit(1)).as("n")))
-    (st, obs.get("n").asInstanceOf[Long])
+    val st = stage(df.observe(obs, agg.as("v")))
+    (st, obs.get("v").asInstanceOf[T])
   }
 
   /** RDD ids of stages that must SURVIVE cross-query block cleanup —

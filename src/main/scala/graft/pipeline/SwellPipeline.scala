@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.model.Schemas
+import graft.operators.Checkpoints
 
 /** The flagship pipeline: raw swell payloads → staged hourly rows →
   * daily per-location arg-max → presentation contract table.
@@ -20,7 +21,11 @@ import graft.model.Schemas
   * `hashpartitioning(dt, location)`. At 100 TB the raw table is partitioned
   * by (ingest_date, location) on disk, so a day's recompute prunes to one
   * partition; the explode is narrow (no shuffle); the arg-max shuffles
-  * already-projected hourly rows only.
+  * already-projected hourly rows only. Each materialization executes
+  * the composed plan ONCE: the not_null count is observed on the job
+  * that materializes the presentation rows ([[gatedWrite]]), and the
+  * write reads those staged rows — at most one per (dt, location), so
+  * small next to raw — which are freed after the write.
   */
 object SwellPipeline {
 
@@ -89,11 +94,21 @@ object SwellPipeline {
   // -------- Layered materialization (S4, S6–S9, O1–O6) --------
 
   /** dbt's `not_null` schema tests on the int model
-    * (`_int_open_meteo.yml:10-16`), enforced at materialization time.
+    * (`_int_open_meteo.yml:10-16`), enforced at materialization time
+    * without a second pass over the pipeline: `df` is staged once, the
+    * null count rides that staging job as an observation, and `write`
+    * only runs — on the staged rows — once the count is 0. A violation
+    * therefore throws before any table or partition is replaced. The
+    * staged rows are freed after the write, whether or not it succeeds.
     */
-  def requireNotNull(df: DataFrame, cols: Seq[String]): Unit = {
-    val bad = df.where(cols.map(col(_).isNull).reduce(_ || _)).limit(1).count()
-    require(bad == 0, s"not_null violated on ${cols.mkString(",")}")
+  private[graft] def gatedWrite(df: DataFrame, notNull: Seq[String])(
+      write: DataFrame => Unit): Unit = {
+    val (staged, nulls) = Checkpoints.stageObserving[Long](df,
+      count(when(notNull.map(col(_).isNull).reduce(_ || _), lit(1))))
+    try {
+      require(nulls == 0, s"not_null violated on ${notNull.mkString(",")}")
+      write(staged)
+    } finally org.apache.spark.sql.GraftSqlBridge.freeLocalCheckpoint(staged)
   }
 
   /** Bootstrap the layered catalog namespaces — Spark databases replace the
@@ -109,6 +124,11 @@ object SwellPipeline {
     * (`stg...sql:4`, `int...sql:2` — logical only, no copy), presentation
     * as a physically rebuilt table (`pres...sql:2`). Re-runs are
     * idempotent: raw appends + derived overwrite (SURVEY.md §2.4 O6).
+    *
+    * The pipeline plan executes once: the job that materializes the
+    * presentation rows also counts nulls in (dt, location), and the
+    * overwrite — gated on that count — writes the staged rows (at most
+    * one per (dt, location)), which are freed afterwards.
     */
   def runAll(spark: SparkSession): DataFrame = {
     bootstrap(spark)
@@ -118,9 +138,8 @@ object SwellPipeline {
     val daily = dailyMax(spark.table("stg_swell_data"))
     daily.createOrReplaceTempView("int_max_swell_per_day")
     val pres = present(spark.table("int_max_swell_per_day"))
-    requireNotNull(pres, Seq("dt", "location"))
-    pres.write.mode(SaveMode.Overwrite)
-      .saveAsTable("presentation.daily_max_swell")
+    gatedWrite(pres, Seq("dt", "location"))(_.write.mode(SaveMode.Overwrite)
+      .saveAsTable("presentation.daily_max_swell"))
     persistDocs(spark)
     spark.table("presentation.daily_max_swell")
   }
@@ -136,9 +155,16 @@ object SwellPipeline {
     *  2. recomputes the daily arg-max for ONLY those dates — the raw
     *     read is restricted by a broadcast semi join on dt (partition
     *     pruning, not a post-scan filter, once raw is date-partitioned);
-    *  3. replaces exactly the affected dt partitions via dynamic
-    *     partition overwrite — untouched dates are neither read nor
-    *     rewritten.
+    *  3. materializes that slice ONCE — the not_null count on
+    *     (dt, location) is observed on the same job — and checks the
+    *     count before anything is written;
+    *  4. replaces exactly the affected dt partitions via dynamic
+    *     partition overwrite from the staged slice (at most one row per
+    *     (dt, location); freed after the write) — untouched dates are
+    *     neither read nor rewritten.
+    *
+    * The first build (no presentation table yet) is the same one-pass
+    * gated write over all of raw, creating the table partitioned by dt.
     *
     * Result-identical to the full rebuild in every case (the slice is
     * recomputed from ALL raw rows of the touched dates, so partial-day
@@ -153,8 +179,8 @@ object SwellPipeline {
     bootstrap(spark)
     if (!spark.catalog.tableExists(presTable)) {
       val all = present(dailyMax(stage(spark.table(rawTable))))
-      requireNotNull(all, Seq("dt", "location"))
-      all.write.partitionBy("dt").saveAsTable(presTable)
+      gatedWrite(all, Seq("dt", "location"))(
+        _.write.partitionBy("dt").saveAsTable(presTable))
     } else {
       require(spark.catalog.listColumns(presTable).collect()
         .exists(c => c.isPartition && c.name == "dt"),
@@ -162,20 +188,25 @@ object SwellPipeline {
       val touched = stage(batchRaw).select(col("dt")).distinct()
       val slice = present(dailyMax(stage(spark.table(rawTable))
         .join(broadcast(touched), Seq("dt"), "left_semi")))
-      requireNotNull(slice, Seq("dt", "location"))
       // partition columns sit last in the table schema; insertInto is
       // positional
       val cols = spark.table(presTable).columns.toSeq
-      val prev = spark.conf
-        .getOption("spark.sql.sources.partitionOverwriteMode")
-      spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      try slice.select(cols.map(col): _*)
-        .write.mode(SaveMode.Overwrite).insertInto(presTable)
-      finally prev match {
-        case Some(v) =>
-          spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-        case None =>
-          spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
+      gatedWrite(slice, Seq("dt", "location")) { staged =>
+        // dynamic overwrite via the SESSION conf, restored afterwards:
+        // insertInto ignores a `partitionOverwriteMode` writer option,
+        // so `.option(...)` would silently run a static overwrite and
+        // drop every partition outside the slice
+        val prev = spark.conf
+          .getOption("spark.sql.sources.partitionOverwriteMode")
+        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+        try staged.select(cols.map(col): _*)
+          .write.mode(SaveMode.Overwrite).insertInto(presTable)
+        finally prev match {
+          case Some(v) =>
+            spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
+          case None =>
+            spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
+        }
       }
       spark.catalog.refreshTable(presTable)
     }

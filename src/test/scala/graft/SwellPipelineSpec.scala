@@ -1,9 +1,13 @@
 package graft
 
+import org.apache.spark.ListenerBusDrain
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.util.QueryExecutionListener
 import graft.model.{Location, Schemas}
-import graft.pipeline.SwellPipeline
+import graft.pipeline.{PlanLint, SwellPipeline}
 import graft.ingest.{FixtureFetcher, Ingest}
 import java.sql.{Date, Timestamp}
 
@@ -26,13 +30,29 @@ class SwellPipelineSpec extends SparkSuite {
       |  "swell_wave_period":    [14.0, 15.0, 9.0]
       |}}""".stripMargin
 
-  def rawDf(rows: Seq[(String, String, String)]) = {
+  /** Raw rows; a null `loc` needs `nullable` (the raw contract declares
+    * location NOT NULL, the stored table does not enforce it).
+    */
+  def rawDf(rows: Seq[(String, String, String)], nullable: Boolean = false) = {
     val data = rows.map { case (ts, loc, d) =>
       Row(Timestamp.valueOf(ts), loc, d)
     }
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(data, 1), Schemas.raw)
+    val schema =
+      if (nullable) StructType(Schemas.raw.map(_.copy(nullable = true)))
+      else Schemas.raw
+    spark.createDataFrame(spark.sparkContext.parallelize(data, 1), schema)
   }
+
+  def tableDir(table: String): java.io.File =
+    new java.io.File(new java.net.URI(spark.sql(s"DESCRIBE FORMATTED $table")
+      .where(col("col_name") === "Location").select("data_type")
+      .head.getString(0)))
+
+  /** name → (size, mtime) of each data file in one `dt=` partition */
+  def partitionFiles(table: String, dt: String): Map[String, (Long, Long)] =
+    Option(new java.io.File(tableDir(table), s"dt=$dt").listFiles())
+      .toSeq.flatten.filter(_.getName.endsWith(".parquet"))
+      .map(f => f.getName -> (f.length(), f.lastModified())).toMap
 
   test("stage explodes 7 parallel arrays into typed hourly rows") {
     val staged = SwellPipeline.stage(
@@ -114,15 +134,7 @@ class SwellPipelineSpec extends SparkSuite {
     b1.write.mode("append").saveAsTable(rawT)
     SwellPipeline.runIncremental(spark, b1, rawT, presT)
     assert(spark.table(presT).count() == 2)
-    def partitionFiles(dt: String): Map[String, (Long, Long)] = {
-      val loc = new java.net.URI(spark.sql(s"DESCRIBE FORMATTED $presT")
-        .where(col("col_name") === "Location").select("data_type")
-        .head.getString(0))
-      Option(new java.io.File(new java.io.File(loc), s"dt=$dt").listFiles())
-        .toSeq.flatten.filter(_.getName.endsWith(".parquet"))
-        .map(f => f.getName -> (f.length(), f.lastModified())).toMap
-    }
-    val day10Before = partitionFiles("2026-08-10")
+    val day10Before = partitionFiles(presT, "2026-08-10")
     assert(day10Before.nonEmpty)
     // batch 2: re-fetch of 08-11 with a new maximum + a new day 08-12
     val b2 = rawDf(Seq(("2026-08-13 00:00:00", "Tamarack", payload2)))
@@ -140,7 +152,7 @@ class SwellPipelineSpec extends SparkSuite {
       .select("swell_wave_height").head.getDouble(0)
     assert(d11 == 2.5)
     // 08-10 was not rewritten: same files, sizes, mtimes
-    assert(partitionFiles("2026-08-10") == day10Before)
+    assert(partitionFiles(presT, "2026-08-10") == day10Before)
     // idempotent: re-running the same batch changes nothing
     SwellPipeline.runIncremental(spark, b2, rawT, presT)
     assert(snapshot() == incr)
@@ -178,5 +190,117 @@ class SwellPipelineSpec extends SparkSuite {
     val doc = spark.catalog.listColumns("doc_quote")
       .collect().find(_.name == "dt").flatMap(c => Option(c.description))
     assert(doc.contains("The day's date, o'clock-aligned."), doc.toString)
+  }
+
+  /** SQL executions run by `op` whose executed plan scans the table
+    * directory `dir`.
+    */
+  def executionsScanning(dir: java.io.File)(op: => Unit): Int = {
+    val root = dir.toURI.getPath.stripSuffix("/")
+    val hits = new java.util.concurrent.atomic.AtomicInteger
+    def count(qe: QueryExecution): Unit =
+      if (PlanLint.nodes(qe.executedPlan).exists {
+        case s: FileSourceScanExec => s.relation.location.rootPaths
+          .exists(_.toUri.getPath.stripSuffix("/") == root)
+        case _ => false
+      }) hits.incrementAndGet(): Unit
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = count(qe)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit =
+        count(qe)
+    }
+    ListenerBusDrain(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    try { op; ListenerBusDrain(spark.sparkContext) }
+    finally spark.listenerManager.unregister(listener)
+    hits.get
+  }
+
+  val overwriteMode = "spark.sql.sources.partitionOverwriteMode"
+
+  /** Runs `op` and checks it left the partition-overwrite conf as it found
+    * it and no more persistent RDDs (staged blocks) than before.
+    */
+  def leavesNoTrace[T](op: => T): T = {
+    val conf = spark.conf.getOption(overwriteMode)
+    val rdds = spark.sparkContext.getPersistentRDDs.size
+    try op
+    finally {
+      assert(spark.conf.getOption(overwriteMode) == conf)
+      assert(spark.sparkContext.getPersistentRDDs.size <= rdds)
+    }
+  }
+
+  def rebuildRaw(table: String, rows: Seq[(String, String, String)]): Unit = {
+    spark.sql("CREATE DATABASE IF NOT EXISTS raw")
+    spark.sql(s"DROP TABLE IF EXISTS $table")
+    rawDf(rows).write.saveAsTable(table)
+  }
+
+  test("not_null gate: runAll throws on a null location before the " +
+      "contract table is replaced") {
+    val presT = "presentation.daily_max_swell"
+    rebuildRaw("raw.swell_data",
+      Seq(("2026-08-12 00:00:00", "Tamarack", payload)))
+    spark.sql(s"DROP TABLE IF EXISTS $presT")
+    leavesNoTrace(SwellPipeline.runAll(spark))
+    val before = spark.table(presT).collect().toSet
+    assert(before.size == 2)
+    rawDf(Seq(("2026-08-13 00:00:00", null, payload2)), nullable = true)
+      .write.mode("append").saveAsTable("raw.swell_data")
+    val e = intercept[IllegalArgumentException](
+      leavesNoTrace(SwellPipeline.runAll(spark)))
+    assert(e.getMessage.contains("not_null violated on dt,location"))
+    assert(spark.table(presT).collect().toSet == before)
+    spark.sql("DROP TABLE raw.swell_data")
+  }
+
+  test("not_null gate: runIncremental throws on a null location before " +
+      "any table or partition is written") {
+    val rawT = "raw.swell_gate"
+    val presT = "presentation.swell_gate"
+    val bad = rawDf(Seq(("2026-08-13 00:00:00", null, payload2)),
+      nullable = true)
+    spark.sql(s"DROP TABLE IF EXISTS $presT")
+    // first build: the gate fails, no table is created
+    rebuildRaw(rawT, Seq(("2026-08-12 00:00:00", "Tamarack", payload)))
+    bad.write.mode("append").saveAsTable(rawT)
+    val first = intercept[IllegalArgumentException](
+      leavesNoTrace(SwellPipeline.runIncremental(spark, bad, rawT, presT)))
+    assert(first.getMessage.contains("not_null violated on dt,location"))
+    assert(!spark.catalog.tableExists(presT))
+    // touched-date slice: the gate fails, every partition keeps its files
+    rebuildRaw(rawT, Seq(("2026-08-12 00:00:00", "Tamarack", payload)))
+    spark.conf.set(overwriteMode, "static")
+    try {
+      leavesNoTrace(SwellPipeline.runIncremental(
+        spark, spark.table(rawT), rawT, presT))
+      val dts = Seq("2026-08-10", "2026-08-11")
+      val before = dts.map(dt => dt -> partitionFiles(presT, dt)).toMap
+      assert(before.values.forall(_.nonEmpty))
+      bad.write.mode("append").saveAsTable(rawT)
+      val slice = intercept[IllegalArgumentException](
+        leavesNoTrace(SwellPipeline.runIncremental(spark, bad, rawT, presT)))
+      assert(slice.getMessage.contains("not_null violated on dt,location"))
+      assert(dts.map(dt => dt -> partitionFiles(presT, dt)).toMap == before)
+      assert(partitionFiles(presT, "2026-08-12").isEmpty)
+    } finally spark.conf.unset(overwriteMode)
+  }
+
+  test("runAll and runIncremental scan raw once per run") {
+    val rawT = "raw.swell_once"
+    val presT = "presentation.swell_once"
+    rebuildRaw("raw.swell_data",
+      Seq(("2026-08-12 00:00:00", "Tamarack", payload)))
+    assert(executionsScanning(tableDir("raw.swell_data"))(
+      SwellPipeline.runAll(spark)) == 1)
+    rebuildRaw(rawT, Seq(("2026-08-12 00:00:00", "Tamarack", payload)))
+    spark.sql(s"DROP TABLE IF EXISTS $presT")
+    SwellPipeline.runIncremental(spark, spark.table(rawT), rawT, presT)
+    val b2 = rawDf(Seq(("2026-08-13 00:00:00", "Tamarack", payload2)))
+    b2.write.mode("append").saveAsTable(rawT)
+    assert(executionsScanning(tableDir(rawT))(
+      SwellPipeline.runIncremental(spark, b2, rawT, presT)) == 1)
+    spark.sql("DROP TABLE raw.swell_data")
   }
 }
